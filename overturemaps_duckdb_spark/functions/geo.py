@@ -138,10 +138,34 @@ def st_centroid_lonlat(geom: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"lon": lons, "lat": lats})
 
 
+def _num(v: float) -> str:
+    """One coordinate as json.dumps prints wkb._fmt's output: integer-valued
+    doubles as ints (``12.0`` → ``12``, ``-0.0`` → ``0``), others as repr."""
+    return str(int(v)) if v.is_integer() else repr(v)
+
+
+def geojson_strings(geoms) -> list:
+    """WKB buffers → GeoJSON text (None for NULL), the one kernel behind both
+    :func:`st_asgeojson` and the pipeline runner's driver-side conversion.
+
+    A batch of uniform little-endian 2-D points with finite coordinates is
+    formatted straight from the packed doubles; the strings are identical
+    to ``wkb.as_geojson`` (same integer rule, same float repr).  Anything
+    else — NULLs, other kinds, NaN/inf — goes through the kernel per row."""
+    if len(geoms) and _is_uniform(geoms, _PT_HDR, _PT_LEN):
+        pts = _f8cols(geoms, _PT_LEN, 5)
+        if np.isfinite(pts).all():
+            return [
+                f'{{"type":"Point","coordinates":[{_num(x)},{_num(y)}]}}'
+                for x, y in pts.tolist()
+            ]
+    return [None if b is None else wkb.as_geojson(wkb.loads(b)) for b in geoms]
+
+
 @pandas_udf(StringType())
 def st_asgeojson(geom: pd.Series) -> pd.Series:
     """G3 — WKB→GeoJSON at the output boundary only (query.js:81)."""
-    return geom.map(lambda b: None if b is None else wkb.as_geojson(wkb.loads(b)))
+    return pd.Series(geojson_strings(geom), index=geom.index, dtype="object")
 
 
 @pandas_udf(BooleanType())

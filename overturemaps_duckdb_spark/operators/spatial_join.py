@@ -215,12 +215,14 @@ def bidirectional_match_ids(
 
     The reference compiles two EXISTS probes; both predicates here
     (`within_distance`, `intersects`) are SYMMETRIC, so the two probe sets
-    are the two endpoint projections of ONE matched pair set — the heavy
-    band-join subtree runs once, not twice (pl4 measured ~2.1→~1.4 s warm
-    at sf0.1).
+    are the two endpoints of ONE matched pair set.  The plan holds one
+    pair join and emits both endpoints of each pair with
+    ``explode(array(base.id, other.id))`` before the distinct — a union of
+    two projections of the pair set would plan the pair join twice.
 
     `impl`: 'broadcast' (small other side, BroadcastNestedLoop with the band
-    residual) or 'grid' (both sides large → grid-cell equi-join)."""
+    residual) or 'grid' (both sides large → grid-cell equi-join, cells
+    sized like :func:`spatial_join_grid`'s)."""
     exact = _exact_predicate(
         base, other, predicate=predicate, distance_m=distance_m,
         distance_deg=distance_deg, assume_points=assume_points,
@@ -233,12 +235,13 @@ def bidirectional_match_ids(
         pairs = base.join(F.broadcast(other), cond, "inner").where(exact)
     else:
         pairs = banded_join(
-            base, other, band_deg=band_deg, how="inner", extra_condition=extra
+            base, other,
+            band_deg=_cell_deg(predicate, distance_m, distance_deg, band_deg),
+            how="inner", extra_condition=extra,
         ).where(exact)
-    both = pairs.select(base["id"].alias("id")).union(
-        pairs.select(other["id"].alias("id"))
-    )
-    return both.distinct()
+    return pairs.select(
+        F.explode(F.array(base["id"], other["id"])).alias("id")
+    ).distinct()
 
 
 def matched_b_overlay(
@@ -426,6 +429,29 @@ def _ceil_div(n: int, d: int) -> int:
     return int(math.ceil(n / d))
 
 
+def _cell_deg(
+    predicate: str,
+    distance_m: float | None,
+    distance_deg: float | None,
+    band_deg: float,
+) -> float:
+    """Grid cell size for a banded join: the distance when a
+    `within_distance` threshold is tighter than the band, else the band.
+    `dist < d` implies `|Δlon|,|Δlat| < d`, so the tighter cells (and band
+    residual) drop only pairs the exact predicate drops anyway."""
+    if predicate == "within_distance":
+        deg = (
+            distance_deg
+            if distance_deg is not None
+            else meters_to_degrees(distance_m)
+            if distance_m is not None
+            else None
+        )
+        if deg is not None and 0 < deg < band_deg:
+            return deg
+    return band_deg
+
+
 def spatial_join_grid(
     a: DataFrame,
     b: DataFrame,
@@ -453,16 +479,7 @@ def spatial_join_grid(
     necessary candidates; measured at sf1 this was j2/j4's superlinear
     term).
     """
-    if predicate == "within_distance":
-        deg = (
-            distance_deg
-            if distance_deg is not None
-            else meters_to_degrees(distance_m)
-            if distance_m is not None
-            else None
-        )
-        if deg is not None and 0 < deg < band_deg:
-            band_deg = deg
+    band_deg = _cell_deg(predicate, distance_m, distance_deg, band_deg)
     extra = None
     if exclude_self:
         extra = a["id"] != b["id"]

@@ -15,14 +15,19 @@ per-source balanced LIMIT          → .limit(ceil(limit/n)) per branch
 matched_i CTEs (EXISTS both ways)  → bidirectional semi-join id sets
 NOT EXISTS exclude                 → left-anti band join
 bbox WHERE on centroids            → native range predicates (pushed down)
-ST_AsGeoJSON in outer SELECT only  → late-materialized geojson column
 ORDER BY _score DESC + LIMIT       → orderBy(desc).limit → TakeOrderedAndProject
+ST_AsGeoJSON in outer SELECT only  → raw WKB `geometry`; GeoJSON built on
+                                     the ≤ limit result rows (geojson_rows)
 
 Scale notes: sources union without shuffling; the only shuffles are the
 matched-id `distinct` and (with FTS) the postings groupBy.  Each spatial
 filter's exact predicate runs on band-join survivors only; the band
 condition stays native so Catalyst can pick broadcast vs shuffle from
 statistics, and the final top-k never materializes the full result.
+The compiled plan holds no Python stage: a pandas UDF costs a fixed
+0.2-0.6 s per query on a local session whatever its row count
+(tools/udf_stage_cost.py measures it), so GeoJSON text is built after
+the top-k on at most `limit` rows.
 
 Determinism: the reference's bare ``LIMIT n`` (pipeline.js:99,178) is
 insertion-order-dependent — meaningless on a distributed engine.  With
@@ -38,9 +43,9 @@ from dataclasses import dataclass, field as dc_field
 from functools import reduce
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
-from overturemaps_duckdb_spark.functions.geo import st_asgeojson
+from overturemaps_duckdb_spark.functions.geo import geojson_strings, st_asgeojson
 from overturemaps_duckdb_spark.operators._util import lru_persist as _lru_persist
 from overturemaps_duckdb_spark.operators.fts import (
     FtsIndex,
@@ -316,12 +321,12 @@ def compile_pipeline(
                 assume_points=True,
             )
 
-    # -- outer projection: late GeoJSON (pipeline.js:103-111)
+    # -- outer projection (pipeline.js:103-111); `geometry` stays raw WKB
     out_cols = [
         F.col("id"),
         F.col("display_name"),
         F.col("search_name"),
-        st_asgeojson(F.col("geometry")).alias("geojson"),
+        F.col("geometry"),
         F.col("geom_type"),
         F.col("centroid_lon"),
         F.col("centroid_lat"),
@@ -341,3 +346,27 @@ def compile_pipeline(
     elif deterministic:
         base = base.orderBy(F.asc("id"))
     return base.limit(limit)
+
+
+def with_geojson(df: DataFrame) -> DataFrame:
+    """A compiled frame with `geometry` rendered as `geojson` in its slot —
+    for consumers that need the text inside a plan.  Applied on top of the
+    compiled limit, so the Python stage formats at most `limit` rows."""
+    return df.select(
+        *[
+            st_asgeojson(F.col(c)).alias("geojson") if c == "geometry" else F.col(c)
+            for c in df.columns
+        ]
+    )
+
+
+def geojson_rows(rows: list[Row]) -> list[Row]:
+    """The driver-side twin of :func:`with_geojson` over collected rows:
+    same fields in the same order, byte-identical text."""
+    if not rows:
+        return rows
+    names = rows[0].__fields__
+    i = names.index("geometry")
+    out = Row(*["geojson" if n == "geometry" else n for n in names])
+    texts = geojson_strings([r[i] for r in rows])
+    return [out(*r[:i], t, *r[i + 1 :]) for r, t in zip(rows, texts)]

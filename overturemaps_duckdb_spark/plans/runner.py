@@ -21,7 +21,12 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from overturemaps_duckdb_spark.plans.pipeline import Catalog, Node, compile_pipeline
+from overturemaps_duckdb_spark.plans.pipeline import (
+    Catalog,
+    Node,
+    compile_pipeline,
+    geojson_rows,
+)
 
 #: recompile debounce (pipelineRunner.js:37-40)
 DEBOUNCE_S = 0.3
@@ -175,7 +180,12 @@ class PipelineRunner:
         play (searching + indexes registered) AND the error looks like an FTS
         failure — the reference degrades only when the error text names
         match_bm25 (pipelineRunner.js:93-96); a transient non-FTS failure
-        (OOM, missing file) must surface, not silently change ranking."""
+        (OOM, missing file) must surface, not silently change ranking.
+
+        A compiled plan returns raw WKB `geometry`; the ≤ `limit` collected
+        rows get their `geojson` text here on the driver, which is cheaper
+        than any Python stage inside the plan.  A user SQL override's rows
+        are returned as its query produced them."""
         t0 = time.monotonic()
         degraded = False
         snap = self._snapshot()
@@ -205,6 +215,8 @@ class PipelineRunner:
             if df is None:
                 return None
             rows = df.collect()
+        if not snap["sql_override"]:
+            rows = geojson_rows(rows)
         out = RunOutcome(
             rows, len(rows), (time.monotonic() - t0) * 1e3, degraded
         )

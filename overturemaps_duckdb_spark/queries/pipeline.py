@@ -35,7 +35,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from overturemaps_duckdb_spark.functions.geo import st_point
 from overturemaps_duckdb_spark.operators.fts import build_fts_index
-from overturemaps_duckdb_spark.plans.pipeline import Catalog, Node, compile_pipeline
+from overturemaps_duckdb_spark.plans.pipeline import (
+    Catalog,
+    Node,
+    compile_pipeline,
+    with_geojson,
+)
 from overturemaps_duckdb_spark.queries import query, t
 from overturemaps_duckdb_spark.queries._sql import bm25_stemmed_sql
 from overturemaps_duckdb_spark.queries.fts import (
@@ -222,7 +227,7 @@ def pl1_union_balanced_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two sources, limit 40 → ceil(40/2)=20 pushed into EACH branch
     (pipeline.js:51-53,99)."""
     df = compile_pipeline(catalog_cs(spark, sf_dir), [SRC_C, SRC_S], limit=40)
-    return df
+    return with_geojson(df)
 
 
 # ---------------------------------------------------------------------------
@@ -251,7 +256,7 @@ def pl2_search_ilike(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = compile_pipeline(
         catalog_cs(spark, sf_dir), [SRC_C, SRC_S], search="machinery", limit=60
     )
-    return df
+    return with_geojson(df)
 
 
 # ---------------------------------------------------------------------------
@@ -283,7 +288,7 @@ def pl3_bbox_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         bbox=(-90.0, -45.0, 90.0, 45.0),
         limit=2000,
     )
-    return df
+    return with_geojson(df)
 
 
 # ---------------------------------------------------------------------------
@@ -331,7 +336,7 @@ def pl4_within_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ]
     df = compile_pipeline(catalog_cs(spark, sf_dir), nodes, limit=5000)
-    return df
+    return with_geojson(df)
 
 
 # ---------------------------------------------------------------------------
@@ -368,7 +373,7 @@ def pl5_exclude_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ]
     df = compile_pipeline(catalog_cs(spark, sf_dir), nodes, limit=5000)
-    return df
+    return with_geojson(df)
 
 
 # ---------------------------------------------------------------------------
@@ -436,4 +441,4 @@ def pl6_search_fts(spark: SparkSession, sf_dir: str) -> DataFrame:
         Node(id="n1", type="source", table="theme_documents", key="docs/document")
     ]
     df = compile_pipeline(cat, nodes, search=QUERY_TEXT, limit=10)
-    return df
+    return with_geojson(df)

@@ -32,6 +32,18 @@ def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _default_driver_mem() -> str:
+    """A quarter of the host's RAM, at most 32g.  The JVM never hands heap
+    back, and it shares the host with the Python workers and, in a test
+    process, an in-process DuckDB; a heap sized past RAM gets the process
+    killed by the kernel instead of raising an OutOfMemoryError."""
+    try:
+        ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    except (ValueError, OSError):
+        return "32g"
+    return f"{max(1024, min(32 * 1024, ram_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "overturemaps_duckdb_spark",
     cpus: int | None = None,
@@ -55,7 +67,7 @@ def get_spark(
         #     effective for the process that first creates the session.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
         )
         # --- correctness-critical for oracle parity ---
         .config("spark.sql.session.timeZone", "UTC")

@@ -241,7 +241,11 @@ def load_theme(
             loaded, layout_path, cell_deg=layout_cell_deg,
             lon_col=lon_col, lat_col=lat_col,
         )
-        loaded = spark.read.parquet(layout_path).drop("cx", "cy")
+        # read back with the loaded schema: a viewport holding no rows
+        # writes no data file to infer one from
+        loaded = (
+            spark.read.schema(loaded.schema).parquet(layout_path).drop("cx", "cy")
+        )
     loaded = loaded.cache()
     rows = loaded.count()
     loaded.createOrReplaceTempView(table)

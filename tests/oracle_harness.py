@@ -8,6 +8,8 @@ order-insensitive value multiset with floats rounded to 9 decimals
 from __future__ import annotations
 
 import math
+import os
+import tempfile
 from dataclasses import dataclass, field
 
 import duckdb
@@ -69,8 +71,22 @@ class CompareResult:
         return msg
 
 
+def _oracle_memory_limit_mb() -> int:
+    """A quarter of the host's RAM.  DuckDB's own default (80 %) leaves no
+    room for the Spark JVM and Python workers that share the test process's
+    host, so an oracle that outgrows it gets the whole run killed by the
+    kernel instead of failing its own test."""
+    ram_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return max(1024, ram_mb // 4)
+
+
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
+    limit_mb = _oracle_memory_limit_mb()
+    con.execute(f"SET memory_limit = '{limit_mb}MB'")
+    # spill lands in the system temp dir, bounded, not in the working tree
+    con.execute(f"SET temp_directory = '{tempfile.gettempdir()}/omds_oracle_spill'")
+    con.execute(f"SET max_temp_directory_size = '{2 * limit_mb}MB'")
     for name in TABLES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
@@ -85,7 +101,6 @@ def main(argv: list[str] | None = None) -> int:
         python -m tests.oracle_harness --sf /root/testdata/sf0.001
     """
     import argparse
-    import os
     import sys
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

@@ -190,6 +190,44 @@ def test_load_theme_snapview_cache_roundtrip(spark, tmp_path):
     assert not wider.cached
 
 
+@pytest.mark.parametrize(
+    "bbox",
+    [(0.01, 0.01, 0.02, 0.02), (300.0, 300.0, 301.0, 301.0)],
+    ids=["gap_inside_extent", "off_the_map"],
+)
+def test_load_theme_empty_viewport_miss(spark, tmp_path, bbox):
+    """A miss whose bbox holds no rows loads nothing instead of failing to
+    infer a schema from the empty grid layout: rows=0, an empty view with
+    the cached schema, and a later contained request is a snapview hit."""
+    import os
+
+    from overturemaps_duckdb_spark.queries.spatial import customer_points
+    from overturemaps_duckdb_spark.sources.ingest import load_theme
+    from overturemaps_duckdb_spark.state import SnapviewStore
+
+    pts = customer_points(spark, SF_SMOKE).select(
+        F.col("id").cast("string").alias("id"), "centroid_lon", "centroid_lat"
+    )
+    p = str(tmp_path / "all")
+    pts.coalesce(1).write.mode("overwrite").parquet(p)
+    files = [os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")]
+    kwargs = dict(
+        table="theme_empty_test", files=files, projection=lambda raw: raw,
+        store=SnapviewStore(spark, str(tmp_path / "state")),
+    )
+    first = load_theme(spark, bbox=bbox, **kwargs)
+    assert first.rows == 0 and not first.cached
+    view = spark.table("theme_empty_test")
+    assert view.schema == first.df.schema
+    assert view.columns == pts.columns and view.count() == 0
+
+    xmin, ymin, xmax, ymax = bbox
+    inner = (xmin + 0.001, ymin + 0.001, xmax - 0.001, ymax - 0.001)
+    second = load_theme(spark, bbox=inner, **kwargs)
+    assert second.cached and second.rows == 0
+    assert spark.table("theme_empty_test").columns == pts.columns
+
+
 def test_fts_sniff_ignores_unrelated_substrings():
     """r8 review fix: the degrade sniff matched bare 'fts'/'_score'
     substrings, so an unrelated error naming '/data/drafts/...' or a
